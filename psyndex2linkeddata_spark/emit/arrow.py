@@ -6,7 +6,7 @@ higher-order-function lambdas, which Catalyst evaluates INTERPRETED
 (ArrayTransform/ArrayFilter are CodegenFallback): measured ~77 ms of CPU
 per page at sf0.1 — versus ~1.3 ms for the same record→triples
 transformation in plain Python. This module is that Python
-transformation, Arrow-batched via mapInPandas, exactly the architecture
+transformation, Arrow-batched via mapInArrow, exactly the architecture
 BASELINE.json's north_star prescribes ("vectorized Arrow UDFs parse each
 web page's text into bibliographic-style mentions … materialize (subj,
 pred, obj) triples"). Catalyst keeps doing what it is good at — scans,
@@ -1319,7 +1319,8 @@ def emit_genres(g, rec, W, B, annif=True):
     # like the post-emit anti-join). Valid because a work's genre edges
     # all come from its own record; cross-record same-DFK merging (not a
     # shape the reference produces) still needs the DataFrame-level
-    # clean_genres — use emit_mode='columns' or the enrich path then.
+    # clean_genres, which build_triples runs only when `authorities` is
+    # passed — even `{}`.
     thesis_present = any(x in _THESIS_GENRE_NAMES for x in genres)
     for name in genres:
         node = NS.GENRES + name
@@ -1864,7 +1865,7 @@ def record_triples(rec: dict, sink: Sink | None = None, annif: bool = True):
 
 
 # --------------------------------------------------------------------------
-# page-text parsing twin (extract/parser.py) + mapInPandas wrapper
+# page-text parsing twin (extract/parser.py) + mapInArrow wrapper
 # --------------------------------------------------------------------------
 
 _SCALARS = set(SCALAR_FIELDS)
@@ -1911,43 +1912,19 @@ _RES_COLS = ("_rplic_res", "_rel_res", "_testg_res", "_kerndaten")
 
 
 def emit_triples_arrow(df, bad_dfks: frozenset | None = None, annif: bool = True):
-    """records-or-pages DataFrame -> triples DataFrame via one Arrow stage.
+    """pages DataFrame -> triples DataFrame via one Arrow stage.
 
-    Input is either the canonical records shape (has a DFK column — output
-    of extract_records / starxml) or the raw pages shape (url, text, ...);
-    pages are parsed in-stage (parse_page_text). `bad_dfks` applies the
-    S3 kill-list inside the stage (small curated list; the records path
-    keeps using the broadcast anti-join operator). `annif=False` models
-    the reference's offline degrade (no J8 suggestion for CM-less works —
-    the mode the reference-exec oracle compares against).
+    Reads only `text` plus whichever per-url resolution maps
+    (`_RES_COLS`) the caller joined on; each page is parsed in-stage
+    (parse_page_text). `bad_dfks` is the S3 kill-list, applied inside
+    the stage (a small curated list, collected on the driver).
+    `annif=False` models the reference's offline degrade (no J8
+    suggestion for CM-less works — the mode the reference-exec oracle
+    compares against).
     """
-    pages_mode = "DFK" not in df.columns
     res_cols = [c for c in _RES_COLS if c in df.columns]
-    if pages_mode:
-        src = df.select("text", *res_cols)
-    else:
-        keep = ["url"] + [f for f in SCALAR_FIELDS + REPEATED_FIELDS if f in df.columns]
-        src = df.select(*keep, *res_cols)
+    src = df.select("text", *res_cols)
     bad = bad_dfks or frozenset()
-
-    def _coerce(v):
-        """Arrow cell -> plain Python: map pairs->dict, NaN->None."""
-        if v is None or isinstance(v, (str, list)):
-            return v
-        if isinstance(v, dict):
-            return v
-        if isinstance(v, float) and pd.isna(v):
-            return None
-        return v
-
-    def _coerce_map(v):
-        """pyarrow MapArray.to_pylist yields [(k, v), ...]; make a dict."""
-        if v is None:
-            return None
-        if isinstance(v, dict):
-            return v
-        return dict(v)
-
     flush_rows = 200_000  # bound per-task memory regardless of batch size
 
     def run(batches):
@@ -1955,25 +1932,15 @@ def emit_triples_arrow(df, bad_dfks: frozenset | None = None, annif: bool = True
         # construction (measured ~16× cheaper on the output side)
         g = Sink()
         for batch in batches:
-            names = batch.schema.names
-            cols = {n: batch.column(i).to_pylist() for i, n in enumerate(names)}
-            n_rows = batch.num_rows
-            for r in range(n_rows):
-                if pages_mode:
-                    rec = parse_page_text(cols["text"][r])
-                    for rc in res_cols:
-                        rec[rc] = _coerce_map(cols[rc][r])
-                else:
-                    rec = {
-                        k: (
-                            _coerce_map(cols[k][r])
-                            if k in _RES_COLS
-                            else _coerce(cols[k][r])
-                        )
-                        for k in names
-                    }
+            cols = {n: batch.column(n).to_pylist() for n in ("text", *res_cols)}
+            for r in range(batch.num_rows):
+                rec = parse_page_text(cols["text"][r])
                 if rec.get("DFK") is None or rec["DFK"] in bad:
                     continue
+                for rc in res_cols:
+                    # pyarrow MapArray.to_pylist yields [(k, v), ...]
+                    m = cols[rc][r]
+                    rec[rc] = None if m is None else dict(m)
                 record_triples(rec, g, annif=annif)
                 if len(g) >= flush_rows:
                     yield g.record_batch()

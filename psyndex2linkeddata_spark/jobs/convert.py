@@ -83,7 +83,10 @@ def main(argv=None) -> None:
         buckets_per_commit=args.per_commit,
     )
     run_manifest(spark, args.ckpt, res["run_id"], pages=args.pages, out=args.out)
-    triples = spark.read.parquet(os.path.join(args.out, "triples")).drop("batch")
+    # the checkpoint writes one bucket=<b>/ partition per bucket; a
+    # triple several buckets emit (shared vocabulary nodes) is stored once
+    # per bucket, so the set is deduped once here for every output below
+    triples = spark.read.parquet(os.path.join(args.out, "triples")).drop("bucket")
 
     if args.report:
         from psyndex2linkeddata_spark.plans.report import write_run_report
@@ -103,24 +106,25 @@ def main(argv=None) -> None:
             F.col("subj").alias("src"), F.col("obj").alias("dst")
         )
         comps = connected_components(edges)
-        triples = canonicalize_uris(triples, comps)
-        triples.write.mode("overwrite").parquet(
-            os.path.join(args.out, "triples_canonical")
+        canonical = os.path.join(args.out, "triples_canonical")
+        canonicalize_uris(triples, comps).distinct().write.mode("overwrite").parquet(
+            canonical
         )
+        triples = spark.read.parquet(canonical)
+    else:
+        triples = triples.distinct()
 
     if args.nt:
         from psyndex2linkeddata_spark.sources.export import write_nt
 
-        write_nt(triples.distinct(), args.nt)
+        write_nt(triples, args.nt)
 
     if args.table:
         from psyndex2linkeddata_spark.sources.warehouse import write_triples_table
 
-        write_triples_table(
-            triples.distinct(), args.table, buckets=args.buckets, mode="replace"
-        )
+        write_triples_table(triples, args.table, buckets=args.buckets, mode="replace")
 
-    n = triples.distinct().count()
+    n = triples.count()
     print(f"run_id={res['run_id']} buckets={res['processed_buckets']} triples={n}")
 
 

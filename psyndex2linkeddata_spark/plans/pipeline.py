@@ -89,25 +89,26 @@ def finalize(
     triples: DataFrame,
     *,
     barrier: bool = True,
-    genre_cleanup: bool = True,
     truncate_lineage: bool = False,
 ) -> DataFrame:
     """A10 (rdflib.Graph set semantics — implicit in every graph.add):
-    exact-duplicate triples collapse, plus (Column path) the
-    authority-free part of the A2 genre cleanup (thesis beats
-    ScholarlyPaper/ScholarlyWork — clean_up_genres runs unconditionally
-    in the reference, convert_starxml_to_bf.py:1455-1458). The one
-    global shuffle of the pipeline; AQE-coalesced.
+    exact-duplicate triples collapse. The one global shuffle of the
+    pipeline; AQE-coalesced.
 
-    `genre_cleanup=False` for the Arrow path: emit/arrow.py applies the
-    A2 rule in-record, so the post-emit anti-join is a no-op there.
-    `barrier=False` when nothing downstream references the triple set
-    more than once (the plain no-authority pipeline) — then the pipeline
-    is a single narrow stage + one dedup exchange, no cache.
+    `barrier=True` puts the deduped set behind a plan barrier and runs
+    the authority-free part of the A2 genre cleanup on it (thesis beats
+    ScholarlyPaper/ScholarlyWork — clean_up_genres runs unconditionally
+    in the reference, convert_starxml_to_bf.py:1455-1458). The Arrow
+    emitter applies that rule in-record, so `barrier=False` — a single
+    narrow stage + one dedup exchange, no cache — is exact when nothing
+    downstream references the set more than once and the input holds
+    one page per DFK (the plain no-authority pipeline).
     """
     deduped = triples.dropDuplicates(
         ["subj", "pred", "obj", "obj_is_iri", "lang", "dtype"]
     )
+    if not barrier:
+        return deduped
     if truncate_lineage:
         # Column-path barrier: the interpreted emit tree is ~10^4 nodes,
         # and every downstream reference (clean_genres reads the set 3×,
@@ -118,13 +119,8 @@ def finalize(
         # this; the Arrow production path keeps the columnar persist
         # (its plan is small, and RDD-block storage thrashes the heap at
         # the 100M-triple scale — measured 22× blowup at 5× data).
-        return_df = deduped.localCheckpoint()
-        if genre_cleanup:
-            from psyndex2linkeddata_spark.operators.upsert import clean_genres
-
-            return_df = clean_genres(return_df)
-        return return_df
-    if barrier:
+        deduped = deduped.localCheckpoint()
+    else:
         # Plan barrier: clean_genres and the enrich joins reference the
         # triple set many times; without a barrier each reference
         # re-analyzes and re-executes the whole emit plan. Lazy columnar
@@ -138,11 +134,9 @@ def finalize(
         from pyspark import StorageLevel
 
         deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK)
-    if genre_cleanup:
-        from psyndex2linkeddata_spark.operators.upsert import clean_genres
+    from psyndex2linkeddata_spark.operators.upsert import clean_genres
 
-        deduped = clean_genres(deduped)
-    return deduped
+    return clean_genres(deduped)
 
 
 def kerndaten_resolution_map(records: DataFrame, kern: DataFrame) -> DataFrame:
@@ -225,72 +219,59 @@ def _build_triples_arrow(
     authorities: dict[str, DataFrame] | None,
     annif: bool = True,
 ) -> DataFrame:
-    """Arrow path: one narrow mapInPandas stage (emit/arrow.py) does
-    parse+emit; the offline-linking joins (J13-J15) still run as
-    DataFrame joins over the Column-parsed mention columns, reduced to
-    compact per-record resolution maps the Python emitter applies."""
+    """Arrow path: one narrow mapInArrow stage (emit/arrow.py) parses
+    each page and emits its triples, with the bad_ids kill-list applied
+    in-stage. The offline-linking joins (J9 kerndaten, J13-J15) still
+    run as DataFrame joins over the Column-parsed mention columns,
+    reduced to compact per-url resolution maps joined onto the pages
+    for the Python emitter to apply."""
     from psyndex2linkeddata_spark.emit.arrow import emit_triples_arrow
-    from psyndex2linkeddata_spark.extract.parser import filter_bad_ids
 
     auth = authorities or {}
-    need_maps = "crossref" in auth or "tests" in auth or "kerndaten" in auth
-    if need_maps or "bad_ids" in auth:
-        records = extract_records(pages)
-        if "bad_ids" in auth:
-            records = filter_bad_ids(records, auth["bad_ids"])
-        if "kerndaten" in auth:
-            records = records.join(
-                kerndaten_resolution_map(records, auth["kerndaten"]),
-                "url",
-                "left",
-            )
-        if need_maps:
-            from psyndex2linkeddata_spark.plans import crossref as cr
+    maps = []
+    if "crossref" in auth or "tests" in auth or "kerndaten" in auth:
+        from psyndex2linkeddata_spark.plans import crossref as cr
 
-            norm = normalize(records)
-            if "crossref" in auth:
-                records = records.join(
-                    cr.rplic_resolution_map(
-                        norm,
-                        auth["crossref"],
-                        search_threshold=auth.get("crossref_search_threshold"),
-                    ),
-                    "url",
-                    "left",
-                ).join(
-                    cr.rel_resolution_map(
-                        norm,
-                        auth["crossref"],
-                        search_threshold=auth.get("crossref_rel_search_threshold"),
-                    ),
-                    "url",
-                    "left",
+        records = extract_records(pages)
+        norm = normalize(records)
+        if "kerndaten" in auth:
+            maps.append(kerndaten_resolution_map(records, auth["kerndaten"]))
+        if "crossref" in auth:
+            maps.append(
+                cr.rplic_resolution_map(
+                    norm,
+                    auth["crossref"],
+                    search_threshold=auth.get("crossref_search_threshold"),
                 )
-            if "tests" in auth:
-                records = records.join(
-                    cr.testg_resolution_map(norm, auth["tests"]), "url", "left"
+            )
+            maps.append(
+                cr.rel_resolution_map(
+                    norm,
+                    auth["crossref"],
+                    search_threshold=auth.get("crossref_rel_search_threshold"),
                 )
-        # barrier: enrich_triples references the set many times. With the
-        # persist in place the DataFrame-level A2 rule costs two cached
-        # reads, so run it here too — it covers the cross-record case
-        # (two pages sharing a DFK, one thesis + one Scholarly*) that the
-        # in-record rule can't see.
-        return finalize(
-            emit_triples_arrow(records, annif=annif),
-            barrier=True,
-            genre_cleanup=True,
+            )
+        if "tests" in auth:
+            maps.append(cr.testg_resolution_map(norm, auth["tests"]))
+    for m in maps:
+        pages = pages.join(m, "url", "left")
+    bad_dfks = None
+    if "bad_ids" in auth:
+        bad_dfks = frozenset(
+            r.dfk for r in auth["bad_ids"].select("dfk").distinct().collect()
         )
-    # barrier-free fast path: genre_cleanup would re-execute the emit 3×
-    # (no exchange reuse without a barrier — measured). The in-record A2
-    # rule fully covers it as long as the input holds one page per DFK,
-    # which is the pages-table contract (url-keyed records export);
-    # callers with weaker provenance can pass authorities={} to opt into
-    # the barrier + DataFrame-level rule.
-    safe = authorities is not None
+    # With `authorities` passed (even {}): the barrier, because
+    # enrich_triples references the set many times, plus the
+    # DataFrame-level A2 rule, which covers the cross-record case (two
+    # pages sharing a DFK, one thesis + one Scholarly*) that the
+    # in-record rule can't see. Without: the barrier-free fast path —
+    # the in-record rule is exact as long as the input holds one page
+    # per DFK, which is the pages-table contract (url-keyed records
+    # export), and the DataFrame-level rule would re-execute the emit
+    # 3× (no exchange reuse without a barrier — measured).
     return finalize(
-        emit_triples_arrow(pages, annif=annif),
-        barrier=safe,
-        genre_cleanup=safe,
+        emit_triples_arrow(pages, bad_dfks=bad_dfks, annif=annif),
+        barrier=authorities is not None,
     )
 
 
@@ -304,17 +285,15 @@ def build_triples(
     """pages(url, warc_ts, html, text, lang) → deduplicated triples DF.
 
     With `authorities` (see datagen/authorities.py for the table shapes):
-    the bad_ids kill-list filters records (S3), and the linking stage
+    the bad_ids kill-list drops the listed DFKs (S3), and the linking stage
     (plans/enrich.py — J1/J3/J5/J6 + A2 ancestor cleanup) runs after emit.
 
-    `emit_mode` ('arrow' default, or 'columns', env SPARK_GRAFT_EMIT):
-    both paths emit byte-identical triple sets (tests/test_arrow_parity);
-    'arrow' is the hot path — one Arrow-batched mapInPandas stage,
+    `emit_mode` ('arrow' default, or 'columns'): both paths emit
+    byte-identical triple sets (tests/test_arrow_parity); 'arrow' is the
+    hot path — one Arrow-batched mapInArrow stage over the pages,
     measured ~60× less CPU per page than the interpreted HOF column tree
     and a KB-scale plan instead of MB-scale (see emit/arrow.py docstring).
     """
-    import os
-
     # Fetch-layer repair (opt-in): captures that arrive without
     # extracted text (text NULL) recover it from the raw html column —
     # a narrow projection that fuses into the scan
@@ -330,8 +309,7 @@ def build_triples(
             F.coalesce(F.col("text"), html_to_text(F.col("html"))),
         )
 
-    mode = emit_mode or os.environ.get("SPARK_GRAFT_EMIT", "arrow")
-    if mode == "columns":
+    if emit_mode == "columns":
         triples = _build_triples_columns(pages, authorities, annif=annif)
     else:
         triples = _build_triples_arrow(pages, authorities, annif=annif)

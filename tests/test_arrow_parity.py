@@ -1,4 +1,4 @@
-"""Arrow-emitter parity gate: the mapInPandas hot path (emit/arrow.py)
+"""Arrow-emitter parity gate: the mapInArrow hot path (emit/arrow.py)
 must produce EXACTLY the triple set of the declarative Column path for
 the same input — including the kill-list and the J13-J15 offline-linking
 resolution maps. This is what lets the engine run the Python emitter at
@@ -6,16 +6,15 @@ scale while the Column layer remains the citable spec.
 
 Cost control (round-3 verdict #5): the Column path is the expensive side
 (~10^4-node interpreted expression tree), so it is materialized ONCE per
-scenario in a module-scoped fixture and shared — the plain set serves
-both the pages-input and records-input tests (their column sides are the
-same plan: extract → normalize → emit → finalize), and the authorities
-scenario runs on a deterministic ~1/3 subset of the corpus. 6 full
-Column executions → 2 (one full, one third-size); parity stays exact-set.
+scenario, and the authorities scenario runs on a deterministic ~1/3
+subset of the corpus: one full and one third-size Column execution;
+parity stays exact-set.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -36,7 +35,7 @@ def _diff_msg(a, c):
 
 @pytest.fixture(scope="module")
 def column_plain(spark, pages):
-    """The Column-path triple set, computed once for the two plain tests."""
+    """The Column-path triple set of the full corpus."""
     return _tset(build_triples(pages, emit_mode="columns"))
 
 
@@ -73,19 +72,41 @@ def test_arrow_matches_columns_plain(spark, pages, column_plain):
     assert a == column_plain, _diff_msg(a, column_plain)
 
 
-def test_arrow_matches_columns_records_input(spark, pages, column_plain):
-    """records-shaped input (post-extract) through the same Arrow stage.
+def test_kill_list_runs_inside_the_arrow_stage(spark, pages, fixture_dir):
+    """With bad_ids and the enrich authorities, the pages go straight into
+    the one Arrow stage: no Column parse tree (`_entries`) in the plan,
+    and a single MapInArrow reading only `text`. The kill-list, holding
+    a null and a duplicated DFK, drops exactly the listed work."""
+    from psyndex2linkeddata_spark import namespaces as NS
+    from psyndex2linkeddata_spark.emit.arrow import parse_page_text
 
-    The column-side expectation is the shared `column_plain` set:
-    build_triples(columns) IS finalize(emit_triples(normalize(extract))),
-    i.e. the very plan this test used to rebuild inline (clean_genres +
-    dedup included via finalize)."""
-    from psyndex2linkeddata_spark.emit.arrow import emit_triples_arrow
-    from psyndex2linkeddata_spark.extract.parser import extract_records
-
-    records = extract_records(pages)
-    a = _tset(emit_triples_arrow(records).dropDuplicates())
-    assert a == column_plain, _diff_msg(a, column_plain)
+    few = pages.filter(F.crc32(F.col("url")) % 20 == 0)
+    dfks = sorted(
+        d
+        for r in few.select("text").collect()
+        if (d := parse_page_text(r.text).get("DFK")) is not None
+    )
+    killed = dfks[0]
+    auth = {
+        n: spark.read.parquet(os.path.join(fixture_dir, f"{n}.parquet"))
+        for n in ("auth_orgs", "auth_concepts")
+    }
+    auth["bad_ids"] = spark.createDataFrame(
+        [(killed,), (killed,), (None,)], "dfk string"
+    )
+    triples = build_triples(few, auth)
+    plan = triples._jdf.queryExecution().analyzed().toString()
+    assert "_entries" not in plan
+    # enrich's self-joins re-instance the stage's attributes, so it prints
+    # many times, but as one UDF (one result id) that reads only `text`
+    stages = {
+        (re.sub(r"#\d+", "", args), result_id)
+        for args, result_id in re.findall(r"MapInArrow \w+\((.*?)\)#(\d+)", plan)
+    }
+    assert len(stages) == 1 and stages.pop()[0] == "text", stages
+    subjects = {r.subj for r in triples.select("subj").distinct().collect()}
+    works = {d for d in dfks if f"{NS.WORKS}{d}_work" in subjects}
+    assert works == set(dfks[1:])
 
 
 def test_arrow_matches_columns_with_authorities(spark, pages_subset, authorities):

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from psyndex2linkeddata_spark.operators.skew import salted_collect_set, salted_count
@@ -35,6 +36,7 @@ def test_convert_job_cli(spark, tmp_path_factory):
     from psyndex2linkeddata_spark.datagen.authorities import write_authority_parquets
     from psyndex2linkeddata_spark.datagen.pages import write_pages_parquet
     from psyndex2linkeddata_spark.jobs.convert import main
+    from psyndex2linkeddata_spark.schema import TRIPLE_COLS
 
     base = str(tmp_path_factory.mktemp("job"))
     pages = os.path.join(base, "pages.parquet")
@@ -55,22 +57,29 @@ def test_convert_job_cli(spark, tmp_path_factory):
             "--authorities", auth_dir,
             "--buckets", "4",
             "--per-commit", "2",
+            "--canonicalize",
             "--nt", nt,
             "--table", "wh_job.triples",
         ]
     )
-    triples = spark.read.parquet(os.path.join(out, "triples")).drop("batch")
+    cols = list(TRIPLE_COLS)
+    triples = spark.read.parquet(os.path.join(out, "triples")).select(*cols)
     assert triples.distinct().count() > 1000
-    # --table materialized the same triple set as a partitioned table
+    # the canonical set is written deduped, and --table / --nt export it
+    canonical = spark.read.parquet(os.path.join(out, "triples_canonical"))
+    n = canonical.count()
+    assert canonical.distinct().count() == n
     tbl = spark.table("wh_job.triples")
-    assert tbl.count() == triples.distinct().count()
+    assert "bucket" not in tbl.columns
     assert "subj_bucket" in tbl.columns
+    assert tbl.count() == n
+    assert tbl.select(*cols).exceptAll(canonical.select(*cols)).count() == 0
     spark.sql("drop database if exists wh_job cascade")
     # enrichment ran (ror ids present) and kill-list applied
     assert triples.where(F.col("subj").endswith("_rorid")).count() > 0
     lineage = spark.read.parquet(os.path.join(ckpt, "lineage"))
     assert lineage.where(F.col("status") == "done").count() == 4
-    assert spark.read.text(nt).count() == triples.distinct().count()
+    assert spark.read.text(nt).count() == n
     # resumability: second invocation is a no-op (lineage rows unchanged)
     main(["--pages", pages, "--out", out, "--ckpt", ckpt,
           "--authorities", auth_dir, "--buckets", "4", "--per-commit", "2"])

@@ -67,7 +67,7 @@ def main():
     print(f"extract+normalize+emit: {time.time()-t0:.1f}s", flush=True)
 
     t0 = time.time()
-    tr = finalize(emit_triples(normalize(extract_records(pages))))
+    tr = finalize(emit_triples(normalize(extract_records(pages))), barrier=True)
     noop(tr)
     n = tr.count()
     print(f"full pipeline: {time.time()-t0:.1f}s  ({n} triples)", flush=True)
