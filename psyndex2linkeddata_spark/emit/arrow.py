@@ -1319,8 +1319,8 @@ def emit_genres(g, rec, W, B, annif=True):
     # like the post-emit anti-join). Valid because a work's genre edges
     # all come from its own record; cross-record same-DFK merging (not a
     # shape the reference produces) still needs the DataFrame-level
-    # clean_genres, which build_triples runs only when `authorities` is
-    # passed — even `{}`.
+    # clean_genres, which plans/enrich.enrich_triples runs — on the Arrow
+    # path only when `authorities` is passed, even `{}`.
     thesis_present = any(x in _THESIS_GENRE_NAMES for x in genres)
     for name in genres:
         node = NS.GENRES + name

@@ -12,8 +12,9 @@ ML fallback for method-less records (J8) is an external service the engine
 replaces with its input tables; records without CM simply get no method
 node here (deterministic stand-in documented in SURVEY §2.4 J8).
 
-Genre-hierarchy cleanup (A2) is a post-emit anti-join in
-plans/pipeline.clean_genres — it needs the per-work genre *set*.
+Genre-hierarchy cleanup (A2) is a post-emit anti-join
+(operators/upsert.clean_genres, run by plans/enrich.enrich_triples) —
+it needs the per-work genre *set*.
 """
 
 from __future__ import annotations

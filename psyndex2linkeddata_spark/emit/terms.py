@@ -68,7 +68,7 @@ def topics() -> Column:
     """work#topic{n} a bf:Topic (+pxc:WeightedTopic when |g x) with
     rdfs:label + skos:prefLabel en/de, attached via bf:subject. The
     owl:sameAs concept URI comes from the J5 broadcast join
-    (plans/pipeline.topic_links)."""
+    (plans/enrich.topic_links)."""
 
     def one(t: Column) -> Column:
         node = topic_node(t["n"])

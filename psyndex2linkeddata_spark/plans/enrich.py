@@ -1,24 +1,28 @@
-"""Stage 3 — link/enrich: authority broadcast joins over the emitted
-triples (SURVEY §2.4).
+"""Stage 3 — link/enrich: the one post-barrier stage (SURVEY §2.4),
+run by build_triples whenever it takes a barrier.
+
+A2 (publication_types.py:481-631) runs here once, on the barrier:
+thesis beats ScholarlyPaper/ScholarlyWork and, with the genres vocab,
+a genre beats its ancestors. It only removes bf:genreForm edges, so the
+linkers read the barrier directly; the node labels read the cleaned set.
 
 The reference enriches per record with live HTTP (ROR, Crossref,
 Skosmos — modules/local_api_lookups.py, redis-cached). Here the
 authorities are input DataFrames and each lookup is ONE broadcast join
-over the distinct mention keys (Spark-native memoization):
+(per authority and mention kind) over the distinct mention keys:
 
 - J5  topic owl:sameAs from the terms/addterms vocab (label_en → uri;
       'terms' preferred when both vocabs carry the label — mirrors the
       CT-before-IT lookup order, terms.py:106-110)
-- J6  genre node labels (skos:prefLabel de/en + rdfs:label) from the
-      genres vocab (publication_types.py:320-330,452-466)
+- J6  genre + license node labels from the genres/licenses vocabs
+      (publication_types.py:320-330,452-466)
 - J1  ROR affiliation ids: org labels matched exactly against authority
       names + aliases (normalized key); fuzzy LSH tier available via
       operators/linking for dirty corpora (off by default so results
-      stay deterministic vs the golden oracle)
+      stay deterministic vs the golden oracle); J2 country fill-in
+      rides on the same join
 - J3  FundRef DOIs for funder nodes (F28 canonicalization first,
       convert_starxml_to_bf.py:814-941)
-- J7/A2 genre-hierarchy dedup via the broadcast ancestor closure
-      (publication_types.py:481-631)
 
 Scale: every authority is dimension-sized (≤ millions of rows) →
 broadcast hash joins, no shuffle on the fact side except the final
@@ -79,69 +83,66 @@ def topic_links(triples: DataFrame, concepts: DataFrame) -> DataFrame:
     return _rows(joined, _triple("subj", NS.OWL + "sameAs", "uri"))
 
 
-def genre_labels(triples: DataFrame, concepts: DataFrame) -> DataFrame:
-    """J6: skos prefLabels + rdfs:label for every emitted genre node."""
+def node_labels(triples: DataFrame, concepts: DataFrame) -> DataFrame:
+    """J6: skos prefLabels de/en for every emitted genre and license node,
+    plus rdfs:label on genre nodes (publication_types.py:320-330,452-466;
+    license half local_api_lookups.py:129-156). Per-node Skosmos label
+    lookups become one broadcast join over the distinct node URIs."""
+    genre = F.col("pred") == NS.BF + "genreForm"
     nodes = (
-        triples.where(F.col("pred") == NS.BF + "genreForm")
-        .select(F.col("obj").alias("gnode"))
+        triples.where(genre | (F.col("pred") == NS.BF + "usageAndAccessPolicy"))
+        .select(
+            F.col("obj").alias("uri"),
+            F.when(genre, "genres").otherwise("licenses").alias("vocab"),
+        )
         .distinct()
     )
-    vocab = concepts.where(F.col("vocab") == "genres").select(
-        "uri", "label_en", "label_de"
+    vocab = concepts.where(F.col("vocab").isin("genres", "licenses")).select(
+        "uri", "vocab", "label_en", "label_de"
     )
-    joined = nodes.join(F.broadcast(vocab), nodes["gnode"] == vocab["uri"])
+    joined = nodes.join(F.broadcast(vocab), ["uri", "vocab"])
+    genre_label = F.when(F.col("vocab") == "genres", F.col("label_en"))
     return _rows(
         joined,
-        _triple("gnode", NS.SKOS + "prefLabel", "label_de", iri=False, lang="de"),
-        _triple("gnode", NS.SKOS + "prefLabel", "label_en", iri=False, lang="en"),
-        _triple("gnode", NS.RDFS_LABEL, "label_en", iri=False),
+        _triple("uri", NS.SKOS + "prefLabel", "label_de", iri=False, lang="de"),
+        _triple("uri", NS.SKOS + "prefLabel", "label_en", iri=False, lang="en"),
+        _triple("uri", NS.RDFS_LABEL, genre_label, iri=False),
     )
 
 
-def license_labels(triples: DataFrame, concepts: DataFrame) -> DataFrame:
-    """J6 (license half): skos prefLabels for every usageAndAccessPolicy
-    license node (reference local_api_lookups.py:129-156 — per-node
-    Skosmos label lookups become one broadcast join over the distinct
-    license URIs)."""
-    nodes = (
-        triples.where(F.col("pred") == NS.BF + "usageAndAccessPolicy")
-        .select(F.col("obj").alias("lnode"))
-        .distinct()
-    )
-    vocab = concepts.where(F.col("vocab") == "licenses").select(
-        "uri", "label_en", "label_de"
-    )
-    joined = nodes.join(F.broadcast(vocab), nodes["lnode"] == vocab["uri"])
-    return _rows(
-        joined,
-        _triple("lnode", NS.SKOS + "prefLabel", "label_de", iri=False, lang="de"),
-        _triple("lnode", NS.SKOS + "prefLabel", "label_en", iri=False, lang="en"),
-    )
-
-
-def country_fill(triples: DataFrame, auth_orgs: DataFrame) -> DataFrame:
-    """J2: affiliations WITHOUT a country (no |c subfield → the emit stage
-    created no _address node) get one from the resolved ROR org
-    (contributions.py:114-222): …_address a mads:Address via
-    mads:hasAffiliationAddress, …_address_country a mads:Country with the
-    geonames-improved label + _geonamesid a locid:geonames."""
+def org_links(triples: DataFrame, auth_orgs: DataFrame) -> DataFrame:
+    """J1: affiliation org nodes → ROR id identifier nodes
+    (…_organization_rorid a locid:ror, rdf:value org_id — the node shape of
+    contributions.py:75-88). J2, on the same join: affiliations WITHOUT a
+    country (no |c subfield → the emit stage created no _address node) get
+    one from the resolved org (contributions.py:114-222): …_address a
+    mads:Address via mads:hasAffiliationAddress, …_address_country a
+    mads:Country with the geonames-improved label + _geonamesid a
+    locid:geonames."""
     from psyndex2linkeddata_spark.emit.contributions import geonames_id, geonames_name
 
     orgs = triples.where(
         F.col("subj").endswith("_organization") & (F.col("pred") == NS.RDFS_LABEL)
     ).select(
+        "subj",
         F.regexp_replace("subj", "_organization$", "").alias("aff"),
         norm_key(F.col("obj")).alias("_key"),
     )
-    # only affiliations that don't already carry an address
     have_addr = triples.where(
         F.col("pred") == NS.MADS + "hasAffiliationAddress"
-    ).select(F.col("subj").alias("aff"))
-    need = orgs.join(have_addr, "aff", "left_anti")
-    authority = _org_authority(auth_orgs).where(F.col("country_name").isNotNull())
-    j = need.join(F.broadcast(authority), "_key")
+    ).select(F.col("subj").alias("aff"), F.lit(True).alias("_has_addr"))
     j = (
-        j.withColumn("addr", F.concat("aff", F.lit("_address")))
+        orgs.join(F.broadcast(_org_authority(auth_orgs)), "_key")
+        .join(have_addr, "aff", "left")
+        .withColumn("rornode", F.concat(F.col("subj"), F.lit("_rorid")))
+        # null address → every J2 triple below drops out in _rows
+        .withColumn(
+            "addr",
+            F.when(
+                F.col("_has_addr").isNull() & F.col("country_name").isNotNull(),
+                F.concat("aff", F.lit("_address")),
+            ),
+        )
         .withColumn("cnode", F.concat("addr", F.lit("_country")))
         .withColumn(
             "clabel",
@@ -157,6 +158,9 @@ def country_fill(triples: DataFrame, auth_orgs: DataFrame) -> DataFrame:
     )
     return _rows(
         j,
+        _triple("rornode", NS.RDF_TYPE, F.lit(NS.LOCID + "ror")),
+        _triple("rornode", NS.RDF + "value", "org_id", iri=False),
+        _triple("subj", NS.BF + "identifiedBy", "rornode"),
         _triple("aff", NS.MADS + "hasAffiliationAddress", "addr"),
         _triple("addr", NS.RDF_TYPE, F.lit(NS.MADS + "Address")),
         _triple("addr", NS.MADS + "country", "cnode"),
@@ -192,29 +196,6 @@ def _org_authority(auth_orgs: DataFrame) -> DataFrame:
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn", "_pref")
-    )
-
-
-def ror_links(triples: DataFrame, auth_orgs: DataFrame) -> DataFrame:
-    """J1: affiliation org nodes → ROR id identifier nodes
-    (…_organization_rorid a locid:ror, rdf:value org_id — the node shape of
-    contributions.py:75-88)."""
-    orgs = (
-        triples.where(
-            F.col("subj").endswith("_organization")
-            & (F.col("pred") == NS.RDFS_LABEL)
-        )
-        .select("subj", norm_key(F.col("obj")).alias("_key"))
-    )
-    authority = _org_authority(auth_orgs)
-    joined = orgs.join(F.broadcast(authority), "_key").withColumn(
-        "rornode", F.concat(F.col("subj"), F.lit("_rorid"))
-    )
-    return _rows(
-        joined,
-        _triple("rornode", NS.RDF_TYPE, F.lit(NS.LOCID + "ror")),
-        _triple("rornode", NS.RDF + "value", "org_id", iri=False),
-        _triple("subj", NS.BF + "identifiedBy", "rornode"),
     )
 
 
@@ -273,26 +254,27 @@ def genre_ancestor_closure(concepts: DataFrame) -> DataFrame:
 
 
 def enrich_triples(triples: DataFrame, authorities: dict[str, DataFrame]) -> DataFrame:
-    """All enrichment joins + A2 ancestor cleanup; returns the enlarged,
-    deduplicated triple set."""
+    """A2 genre cleanup once (ancestor rule with auth_concepts) plus the
+    linkers the authorities enable; returns the enlarged, deduplicated
+    set, or the cleaned set as is when no linker runs (`{}`, bad_ids).
+    `triples` sits behind finalize()'s plan barrier, so the references
+    below re-read materialized partitions, not the emit plan."""
     from psyndex2linkeddata_spark.operators.upsert import clean_genres
 
-    # upstream finalize() leaves `triples` behind a checkpoint barrier, so
-    # the many references below re-read materialized partitions, not the
-    # emit plan
-    adds = []
     concepts = authorities.get("auth_concepts")
     orgs = authorities.get("auth_orgs")
+    anc = genre_ancestor_closure(concepts) if concepts is not None else None
+    cleaned = clean_genres(triples, anc)
+    adds = []
     if concepts is not None:
         adds.append(topic_links(triples, concepts))
-        adds.append(genre_labels(triples, concepts))
-        adds.append(license_labels(triples, concepts))
-        triples = clean_genres(triples, genre_ancestor_closure(concepts))
+        adds.append(node_labels(cleaned, concepts))
     if orgs is not None:
-        adds.append(ror_links(triples, orgs))
+        adds.append(org_links(triples, orgs))
         adds.append(fundref_links(triples, orgs))
-        adds.append(country_fill(triples, orgs))
-    out = triples
+    if not adds:
+        return cleaned
+    out = cleaned
     for a in adds:
         out = out.unionByName(a)
     return out.dropDuplicates(list(TRIPLE_COLS))

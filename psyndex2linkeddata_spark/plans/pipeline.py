@@ -95,14 +95,11 @@ def finalize(
     exact-duplicate triples collapse. The one global shuffle of the
     pipeline; AQE-coalesced.
 
-    `barrier=True` puts the deduped set behind a plan barrier and runs
-    the authority-free part of the A2 genre cleanup on it (thesis beats
-    ScholarlyPaper/ScholarlyWork — clean_up_genres runs unconditionally
-    in the reference, convert_starxml_to_bf.py:1455-1458). The Arrow
-    emitter applies that rule in-record, so `barrier=False` — a single
-    narrow stage + one dedup exchange, no cache — is exact when nothing
-    downstream references the set more than once and the input holds
-    one page per DFK (the plain no-authority pipeline).
+    `barrier=True` puts the deduped set behind a plan barrier for
+    plans/enrich.enrich_triples, which runs the A2 genre cleanup and the
+    linkers over it. `barrier=False` — a single narrow stage + one dedup
+    exchange, no cache — is for sets nothing downstream references more
+    than once (the plain no-authority Arrow pipeline).
     """
     deduped = triples.dropDuplicates(
         ["subj", "pred", "obj", "obj_is_iri", "lang", "dtype"]
@@ -111,32 +108,29 @@ def finalize(
         return deduped
     if truncate_lineage:
         # Column-path barrier: the interpreted emit tree is ~10^4 nodes,
-        # and every downstream reference (clean_genres reads the set 3×,
-        # enrich 8×) re-ANALYZES the full logical plan — measured 650s of
-        # driver CPU inside a single analyzer rule on a 100-page corpus.
-        # localCheckpoint truncates the logical plan to a LogicalRDD so
-        # each reference analyzes a leaf. Only the spec/test path uses
-        # this; the Arrow production path keeps the columnar persist
-        # (its plan is small, and RDD-block storage thrashes the heap at
-        # the 100M-triple scale — measured 22× blowup at 5× data).
-        deduped = deduped.localCheckpoint()
-    else:
-        # Plan barrier: clean_genres and the enrich joins reference the
-        # triple set many times; without a barrier each reference
-        # re-analyzes and re-executes the whole emit plan. Lazy columnar
-        # persist (MEMORY_AND_DISK) materializes once on first use into
-        # compressed columnar batches — a few GB at 300k pages / ~63M
-        # triples — where localCheckpoint's row-block storage thrashed
-        # the heap at that scale (measured: 22× wall-time blowup at 5×
-        # data). At cluster scale the equivalent is landing the raw
-        # triples in the warehouse (Iceberg) before the linking stage —
-        # same barrier, plus durability.
-        from pyspark import StorageLevel
+        # and every downstream reference (enrich_triples' genre cleanup
+        # and linkers read the set many times) re-ANALYZES the full
+        # logical plan — measured 650s of driver CPU inside a single
+        # analyzer rule on a 100-page corpus. localCheckpoint truncates
+        # the logical plan to a LogicalRDD so each reference analyzes a
+        # leaf. Only the spec/test path uses this; the Arrow production
+        # path keeps the columnar persist (its plan is small, and
+        # RDD-block storage thrashes the heap at the 100M-triple scale —
+        # measured 22× blowup at 5× data).
+        return deduped.localCheckpoint()
+    # Plan barrier: the genre cleanup and the enrich joins reference the
+    # triple set many times; without a barrier each reference
+    # re-analyzes and re-executes the whole emit plan. Lazy columnar
+    # persist (MEMORY_AND_DISK) materializes once on first use into
+    # compressed columnar batches — a few GB at 300k pages / ~63M
+    # triples — where localCheckpoint's row-block storage thrashed the
+    # heap at that scale (measured: 22× wall-time blowup at 5× data). At
+    # cluster scale the equivalent is landing the raw triples in the
+    # warehouse (Iceberg) before the linking stage — same barrier, plus
+    # durability.
+    from pyspark import StorageLevel
 
-        deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK)
-    from psyndex2linkeddata_spark.operators.upsert import clean_genres
-
-    return clean_genres(deduped)
+    return deduped.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def kerndaten_resolution_map(records: DataFrame, kern: DataFrame) -> DataFrame:
@@ -261,7 +255,7 @@ def _build_triples_arrow(
             r.dfk for r in auth["bad_ids"].select("dfk").distinct().collect()
         )
     # With `authorities` passed (even {}): the barrier, because
-    # enrich_triples references the set many times, plus the
+    # enrich_triples references the set many times and runs the
     # DataFrame-level A2 rule, which covers the cross-record case (two
     # pages sharing a DFK, one thesis + one Scholarly*) that the
     # in-record rule can't see. Without: the barrier-free fast path —
@@ -285,8 +279,10 @@ def build_triples(
     """pages(url, warc_ts, html, text, lang) → deduplicated triples DF.
 
     With `authorities` (see datagen/authorities.py for the table shapes):
-    the bad_ids kill-list drops the listed DFKs (S3), and the linking stage
-    (plans/enrich.py — J1/J3/J5/J6 + A2 ancestor cleanup) runs after emit.
+    the bad_ids kill-list drops the listed DFKs (S3). Every build that
+    takes a barrier — `authorities` passed, even `{}`, or the Column path
+    — ends in plans/enrich.enrich_triples: the DataFrame-level A2 genre
+    cleanup plus whichever linkers the authorities enable.
 
     `emit_mode` ('arrow' default, or 'columns'): both paths emit
     byte-identical triple sets (tests/test_arrow_parity); 'arrow' is the
@@ -313,8 +309,8 @@ def build_triples(
         triples = _build_triples_columns(pages, authorities, annif=annif)
     else:
         triples = _build_triples_arrow(pages, authorities, annif=annif)
-    if authorities:
-        from psyndex2linkeddata_spark.plans.enrich import enrich_triples
+        if authorities is None:
+            return triples  # no barrier: the in-record A2 rule suffices
+    from psyndex2linkeddata_spark.plans.enrich import enrich_triples
 
-        triples = enrich_triples(triples, authorities)
-    return triples
+    return enrich_triples(triples, authorities or {})

@@ -116,6 +116,33 @@ def test_arrow_matches_columns_with_authorities(spark, pages_subset, authorities
     assert a == c, _diff_msg(a, c)
 
 
+@pytest.mark.parametrize("emit_mode", ["arrow", "columns"])
+def test_empty_authorities_clean_genres_across_pages(spark, emit_mode):
+    """`authorities={}` runs the DataFrame-level A2 rule: two pages
+    sharing one DFK, a thesis (DT 61) and a CM code whose genre is
+    ScholarlyWork, leave the work without a ScholarlyWork genreForm edge,
+    a cross-record case the Arrow emitter's in-record rule can't see."""
+    from psyndex2linkeddata_spark import namespaces as NS
+    from psyndex2linkeddata_spark.datagen.pages import pages_rows_from_records
+
+    rows = pages_rows_from_records(
+        [
+            {"DFK": "0999999", "TI": "Eine Dissertation", "DT": "61"},
+            {"DFK": "0999999", "TI": "A theoretical study", "CM": ["|c 12100"]},
+        ]
+    )
+    pages = spark.createDataFrame(
+        [(f"{r['url']}/{i}", r["text"]) for i, r in enumerate(rows)],
+        "url string, text string",
+    )
+    got = _tset(build_triples(pages, {}, emit_mode=emit_mode))
+    work, gf = NS.WORKS + "0999999_work", NS.BF + "genreForm"
+    sw = NS.GENRES + "ScholarlyWork"
+    assert (sw, NS.RDF_TYPE, NS.BF + "GenreForm", True, None, None) in got
+    assert (work, gf, NS.GENRES + "ThesisDoctoral", True, None, None) in got
+    assert (work, gf, sw, True, None, None) not in got
+
+
 def test_crlf_pages_match_lf_pages_both_paths(spark, pages_subset):
     """CRLF payloads (the Common-Crawl-reality line ending) must emit the
     SAME triples as their LF twins on BOTH emit paths: values ending in

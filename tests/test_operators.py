@@ -272,6 +272,41 @@ def test_clean_genres_ancestor_rule(spark):
     assert got == {NS.GENRES + "ResearchPaper"}
 
 
+def test_enrich_labels_only_surviving_genres(spark):
+    """J6 labels the genre nodes left AFTER the A2 ancestor rule: a genre
+    the rule removes from every work gets no label triple."""
+    from psyndex2linkeddata_spark import namespaces as NS
+    from psyndex2linkeddata_spark.plans.enrich import enrich_triples
+    from psyndex2linkeddata_spark.schema import triples_schema
+
+    rp, sw = NS.GENRES + "ResearchPaper", NS.GENRES + "ScholarlyWork"
+    t = spark.createDataFrame(
+        [
+            ("w1", NS.BF + "genreForm", rp, True, None, None),
+            ("w1", NS.BF + "genreForm", sw, True, None, None),
+        ],
+        schema=triples_schema(),
+    )
+    concepts = spark.createDataFrame(
+        [
+            ("genres", rp, "Research Paper", "Forschungsarbeit", [sw]),
+            ("genres", sw, "Scholarly Work", "Wissenschaftliches Werk", []),
+        ],
+        "vocab string, uri string, label_en string, label_de string, "
+        "ancestors array<string>",
+    )
+    got = {
+        (r.subj, r.pred, r.obj, r.lang)
+        for r in enrich_triples(t, {"auth_concepts": concepts}).collect()
+    }
+    assert got == {
+        ("w1", NS.BF + "genreForm", rp, None),
+        (rp, NS.SKOS + "prefLabel", "Forschungsarbeit", "de"),
+        (rp, NS.SKOS + "prefLabel", "Research Paper", "en"),
+        (rp, NS.RDFS_LABEL, "Research Paper", None),
+    }
+
+
 def test_multimodal_features_shape(spark):
     media = synthetic_media(spark, n=12)
     feats = extract_features(media, dim=8).collect()

@@ -36,7 +36,7 @@ def main():
     )
     col_set = {tuple(r) for r in col_triples}
     # the Arrow emitter applies the A2 thesis-vs-Scholarly rule
-    # in-record; the Column path leaves it to finalize/clean_genres —
+    # in-record; the Column path leaves it to enrich_triples/clean_genres —
     # apply rule 1 here so raw emits compare equal
     GF = "http://id.loc.gov/ontologies/bibframe/genreForm"
     G = "https://w3id.org/zpid/vocabs/genres/"

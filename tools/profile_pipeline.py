@@ -24,6 +24,7 @@ def main():
     from psyndex2linkeddata_spark.datagen.pages import write_pages_parquet
     from psyndex2linkeddata_spark.extract.parser import extract_records
     from psyndex2linkeddata_spark.emit.normalize import normalize
+    from psyndex2linkeddata_spark.plans.enrich import enrich_triples
     from psyndex2linkeddata_spark.plans.pipeline import (
         build_triples,
         emit_triples,
@@ -67,7 +68,9 @@ def main():
     print(f"extract+normalize+emit: {time.time()-t0:.1f}s", flush=True)
 
     t0 = time.time()
-    tr = finalize(emit_triples(normalize(extract_records(pages))), barrier=True)
+    tr = enrich_triples(
+        finalize(emit_triples(normalize(extract_records(pages))), barrier=True), {}
+    )
     noop(tr)
     n = tr.count()
     print(f"full pipeline: {time.time()-t0:.1f}s  ({n} triples)", flush=True)
